@@ -2,34 +2,20 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
-import graft.core.{FixtureGen, Json}
-import graft.sources.TranscriptGen
-import graft.tools.ScalingHarness
+import graft.core.{FixtureGen, Json, Turn}
+import graft.sources.{Snapshot, TranscriptGen}
 
-/** Benchmark harness. Prints exactly ONE COMPACT JSON line (last stdout
-  * line, < ~1.5 KB so a driver that keeps only a 2 KB output tail always
-  * captures — and can parse — the whole record; rounds 2 and 3 both lost
-  * their per-query evidence to a final line bloated past the tail window):
-  * {"metric":"total","value":<sec>,"unit":"sec","sf":"...","n_queries":N,
-  *  "slowest_queries":{worst 10},"query_errors":{...only queries that
-  *  threw...},"extraction":{scaling evidence, no raw samples},
-  *  "full":"bench/full_bench.json"}
-  * The COMPLETE per-query map and the raw scaling-sample array go to
-  * `bench/full_bench.json` (same schema, superset) and to a per-query table
-  * in BENCH.md — both written during the run, so the driver's end-of-round
-  * commit preserves them; the samples additionally live in
-  * `bench/scaling_samples.jsonl` as always.
+/** Benchmark: the declared-query sweep plus one N→4N extraction measurement,
+  * both measured by this run on this machine. Prints exactly ONE COMPACT
+  * JSON line (last stdout line, small enough for a 2 KB output tail):
+  * {"metric":"total","value":<sweep sec>,"unit":"sec","sf":"...",
+  *  "n_queries":N,"slowest_queries":{worst 10},"query_errors":{...only
+  *  queries that threw...},"extraction":{N vs 4N},"full":"bench/full_bench.json"}
+  * The complete per-query map goes to `bench/full_bench.json` (same schema,
+  * superset) and to a per-query table in BENCH.md.
   *
-  * Scaling evidence for the north rule (N vs 4N executors → two parallelism
-  * levels in this single-node sandbox): the identical extraction job runs at
-  * local[N] and local[4N] over the same pre-materialized transcript table in
-  * taskset-confined child JVMs (ScalingHarness). The shared host has
-  * multi-minute contention phases during which extra vCPUs add no cycles and
-  * ANY job's N→4N ratio collapses, so each pair is bracketed by pure-CPU
-  * weather probes and every raw sample (this run's AND the session's
-  * background sampler's, persisted in bench/scaling_samples.jsonl) is
-  * embedded in the JSON; the headline efficiency is the median over
-  * quiet-window pairs (probe ≥ 0.8 before and after). */
+  * Usage: `SPARK_GRAFT_SF_DIR=<sf dir> sbt -batch "runMain graft.Bench"`;
+  * the width is SPARK_GRAFT_CPUS, else this machine's cores. */
 object Bench {
 
   private def newSession(cores: Int): SparkSession = {
@@ -59,31 +45,8 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Committed constant: row count of the deterministic scaling table
-    * (seed 42, ScalingConvs conversations). Spares the driver-run bench a
-    * Spark session + full count over /dev/shm — and spares it the 17M-turn
-    * re-materialization entirely when enough quiet scaling pairs are
-    * already persisted (round-2 lesson: the driver's bench timed out
-    * re-deriving evidence the committed samples file already carried). */
-  private val MetaFile = "bench/scaling_meta.json"
-  private def readMetaTurns(): Option[Long] = {
-    val p = Paths.get(MetaFile)
-    if (!Files.exists(p)) None
-    else {
-      val txt = Files.readString(p)
-      // the cached count is only valid for the table shape it was taken
-      // from — a ScalingConvs bump must invalidate it
-      val convsOk = "\"convs\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
-        .exists(_.group(1).toLong == ScalingHarness.ScalingConvs)
-      if (!convsOk) None
-      else "\"turns\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong)
-    }
-  }
-
-  // timestamped stderr phase markers: a driver-side timeout leaves a tail
-  // that says WHERE the time went (round-2 lesson — the r2 artifacts were
-  // voided by silent JVM-startup + sampling stalls nobody could attribute)
+  // timestamped stderr phase markers: a run cut by a timeout leaves a tail
+  // that says WHERE the time went
   private val T0 = System.nanoTime()
   private def phase(msg: String): Unit =
     System.err.println(f"[bench] +${(System.nanoTime() - T0) / 1e9}%.1f s  $msg")
@@ -91,146 +54,49 @@ object Bench {
   def main(args: Array[String]): Unit = {
     phase("main entered (JVM startup cost is everything before this line)")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val highCores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val lowCores = math.max(1, highCores / 4)
+    val cores = ExtractJob.defaultCores
 
-    // --- scaling evidence policy: fresh probe-gated attempts are needed
-    // only when the persisted trail (bench/scaling_samples.jsonl, committed,
-    // fed by the session's background sampler) is thin. Each fresh (2,8)
-    // attempt costs ~5-8 quiet-weather minutes (node-loaded 2-core extraction
-    // runs), so an always-resample bench blows any driver time budget while
-    // adding nothing the trail doesn't already show. Modes via
-    // SPARK_GRAFT_FRESH_SAMPLES: "always" | "never" | "auto" (default:
-    // sample a dimension only if it has < 3 quiet pairs). ---
-    val preSum = ScalingHarness.summarize()
-    def quietPairs(n: Int, h: Int): Int =
-      preSum.dim(n, h).map(_.quietPairs).getOrElse(0)
-    val mode = sys.env.getOrElse("SPARK_GRAFT_FRESH_SAMPLES", "auto")
-    val want28 = mode == "always" || (mode != "never" && quietPairs(2, 8) < 3)
-    // at SPARK_GRAFT_CPUS=8 the (lowCores, highCores) dimension IS (2, 8):
-    // sampling and emitting it separately would double a 5-8-minute attempt
-    // and write a duplicate "scaling_dim_2_8" JSON key (silent last-wins)
-    val n4nDistinct = (lowCores, highCores) != (2, 8)
-    val wantN4N = n4nDistinct && (mode == "always" ||
-      (mode != "never" && quietPairs(lowCores, highCores) < 3))
-    // executor-shaped multi-process dimensions: (1 vs 4 procs × 2 cores) —
-    // the bandwidth-scalable literal N→4N-executor shape — and the
-    // (2 vs 8 procs × 4 cores) DRAM-capped control; 2 quiet pairs each do
-    val mpPre = ScalingHarness.summarize(ScalingHarness.MultiProcFile, ScalingHarness.MultiProcEffCap)
-    val mpQuiet = mpPre.dim(8, 32).map(_.quietPairs).getOrElse(0)
-    val wantMp = mode == "always" || (mode != "never" && mpQuiet < 2)
-    val mp2Quiet = mpPre.dim(2, 8).map(_.quietPairs).getOrElse(0)
-    val wantMp2 = mode == "always" || (mode != "never" && mp2Quiet < 2)
-
-    // --- materialize the scaling transcript table (deterministic) only if
-    // a fresh attempt will actually run against it ---
-    if (want28 || wantN4N || wantMp || wantMp2) {
-      val needScaling = !Files.exists(Paths.get(ScalingHarness.ScalingPath))
-      val needWarmup = !Files.exists(Paths.get(ScalingHarness.WarmupPath))
-      if (needScaling || needWarmup) ScalingHarness.withHarnessLock {
-        // under the harness lock: 32-core materialization overlapping a
-        // background sampler's timed window would disqualify (or worse,
-        // contaminate) a quiet-weather attempt. Only the MISSING table is
-        // rebuilt — regenerating the 17M-turn scaling table because the
-        // small warmup table was swept would burn minutes for nothing.
-        val s = newSession(highCores)
-        try {
-          // 256 evenly-sized files: the map stage's effective parallelism is
-          // bounded by row-group count (one per file) — 32 files made the scan
-          // stage straggler-bound at 32 cores (stage wall == slowest file)
-          if (needScaling) TranscriptGen.materialize(s,
-            FixtureGen.Profile(numConvs = ScalingHarness.ScalingConvs),
-            ScalingHarness.ScalingPath, parallelism = 256)
-          if (needWarmup) TranscriptGen.materialize(s,
-            FixtureGen.Profile(numConvs = ScalingHarness.WarmupConvs, seed = 7L),
-            ScalingHarness.WarmupPath, parallelism = 64)
-        } finally s.stop()
-      }
-    }
-
-    phase(s"scaling policy: mode=$mode fresh28=$want28 freshN4N=$wantN4N " +
-      s"(quiet pairs on file: 2→8=${quietPairs(2, 8)}, " +
-      s"$lowCores→$highCores=${quietPairs(lowCores, highCores)})")
-    if (want28) ScalingHarness.sampleOnce(2, 8)
-    if (wantN4N) ScalingHarness.sampleOnce(lowCores, highCores)
-    if (wantMp2) ScalingHarness.multiProcessOnce(coresPerProc = 2, procsN = 1, procs4N = 4)
-    if (wantMp) ScalingHarness.multiProcessOnce()
-    val sum = ScalingHarness.summarize()
-    val mpSum = ScalingHarness.summarize(ScalingHarness.MultiProcFile, ScalingHarness.MultiProcEffCap)
-    val dMp = mpSum.dim(8, 32)
-    val dMp2 = mpSum.dim(2, 8)
-    val totalTurns: Long = readMetaTurns().getOrElse {
-      // under the harness lock like every other heavy Spark phase — an
-      // unlocked 32-core count would contend with (and disqualify) a
-      // background sampler's timed window
-      ScalingHarness.withHarnessLock {
-        val sess = newSession(highCores)
-        // the meta cache may be missing while sampling was skipped — the
-        // count fallback must not assume the /dev/shm table exists
-        if (!Files.exists(Paths.get(ScalingHarness.ScalingPath)))
-          TranscriptGen.materialize(sess,
-            FixtureGen.Profile(numConvs = ScalingHarness.ScalingConvs),
-            ScalingHarness.ScalingPath, parallelism = 256)
-        val n = try sess.read.parquet(ScalingHarness.ScalingPath).count()
-                finally sess.stop()
-        Files.createDirectories(Paths.get(MetaFile).getParent)
-        Files.writeString(Paths.get(MetaFile),
-          s"""{"turns":$n,"convs":${ScalingHarness.ScalingConvs}}""" + "\n")
-        n
-      }
-    }
-    val d28 = sum.dim(2, 8)
-    val d832 = sum.dim(lowCores, highCores)
-    // representative wall-times: session minima (clean-weather throughput)
-    val secN = d832.map(_.minSecN).getOrElse(-1.0)
-    val sec4N = d832.map(_.minSec4N).getOrElse(-1.0)
-    val thrN = if (secN > 0) totalTurns / secN else -1.0
-    val thr4N = if (sec4N > 0) totalTurns / sec4N else -1.0
-
-    // --- headline queries at local[4N] on the driver's sf dir ---
-    // (under the harness lock: a background ScalingSample attempt's
-    // node-load spinner must never overlap a timed query)
     phase(s"query sweep starting on $sfDir")
-    val results: Seq[(String, Double, Option[String])] =
-      ScalingHarness.withHarnessLock {
-        val spark = newSession(highCores)
-        // untimed warmup: session-wide one-time costs (codegen compiler,
-        // parquet reader init, noop-sink registration) otherwise land
-        // entirely on whichever query sorts first
-        try {
-          spark.range(1 << 16).selectExpr("sum(id % 7) as s")
-            .write.format("noop").mode("overwrite").save()
-          spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1024)
-            .write.format("noop").mode("overwrite").save()
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup skipped: ${e.getMessage}")
-        }
-        try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-          var err: Option[String] = None
-          val sec = time {
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            catch { case e: Throwable =>
-              err = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            }
-          }
-          phase(f"$name $sec%.1f s${err.map(e => s"  ERR $e").getOrElse("")}")
-          // the batch-driver hygiene Dedup documents: the query's noop sink
-          // has fully consumed its plans, so its signature-frame persists
-          // are dead weight — release OUTSIDE the timer so 145 queries in
-          // one JVM don't accumulate MEMORY_AND_DISK blocks toward LRU
-          // pressure (and so no query's wall includes a predecessor's GC)
-          graft.operators.Dedup.releaseCaches()
-          // JMH-style isolation, also OUTSIDE the timer: drain the
-          // predecessor's garbage now instead of letting a full-GC pause
-          // land inside whichever successor first allocates hard — the
-          // sweep's rotating per-run outliers (kmv/object-hash-aggregate
-          // queries 5-25x on single runs, different set every run) read
-          // like exactly that. Sum-of-timed-secs ("total") excludes it.
-          System.gc()
-          (name, sec, err)
-        } finally spark.stop()
+    val results: Seq[(String, Double, Option[String])] = {
+      val spark = newSession(cores)
+      // untimed warmup: session-wide one-time costs (codegen compiler,
+      // parquet reader init, noop-sink registration) otherwise land
+      // entirely on whichever query sorts first
+      try {
+        spark.range(1 << 16).selectExpr("sum(id % 7) as s")
+          .write.format("noop").mode("overwrite").save()
+        spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1024)
+          .write.format("noop").mode("overwrite").save()
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup skipped: ${e.getMessage}")
       }
+      try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        var err: Option[String] = None
+        val sec = time {
+          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          catch { case e: Throwable =>
+            err = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          }
+        }
+        phase(f"$name $sec%.1f s${err.map(e => s"  ERR $e").getOrElse("")}")
+        // the batch-job hygiene Dedup documents: the query's noop sink
+        // has fully consumed its plans, so its signature-frame persists
+        // are dead weight — release OUTSIDE the timer so 145 queries in
+        // one JVM don't accumulate MEMORY_AND_DISK blocks toward LRU
+        // pressure (and so no query's wall includes a predecessor's GC)
+        graft.operators.Dedup.releaseCaches()
+        // JMH-style isolation, also OUTSIDE the timer: drain the
+        // predecessor's garbage now instead of letting a full-GC pause
+        // land inside whichever successor first allocates hard.
+        // Sum-of-timed-secs ("total") excludes it.
+        System.gc()
+        (name, sec, err)
+      } finally spark.stop()
+    }
+
+    phase(s"extraction N->4N starting ($ExtractionConvs conversations)")
+    val scaling = measureScaling(cores)
 
     val total = results.map(_._2).sum
     val qs = results.map { case (k, v, _) => Json.str(k) + f":$v%.3f" }
@@ -240,11 +106,9 @@ object Bench {
       .mkString("{", ",", "}")
     val errs = results.collect { case (k, _, Some(e)) => Json.str(k) + ":" + Json.str(e) }
       .mkString("{", ",", "}")
-    // the COMPACT stdout line must stay under the driver's 2 KB tail even
-    // when queries fail: unbounded per-error text (the errorless line is
-    // already ~1.4 KB) would push the head of the line out of the tail and
-    // lose the round's whole record — cap at 2 errors × 100 chars + a
-    // pointer; the full map is in bench/full_bench.json and BENCH.md
+    // the COMPACT stdout line must stay under a 2 KB tail even when queries
+    // fail: cap at 2 errors × 100 chars + a pointer; the full map is in
+    // bench/full_bench.json and BENCH.md
     val errsCompact = {
       val all = results.collect { case (k, _, Some(e)) => (k, e) }
       val kept = all.take(2).map { case (k, e) => Json.str(k) + ":" + Json.str(e.take(100)) }
@@ -253,241 +117,114 @@ object Bench {
       else Nil
       (kept ++ tail).mkString("{", ",", "}")
     }
-    val sampleArr = Json.arr(sum.samples.map(_.toJson))
-    def dimJson(d: Option[ScalingHarness.DimStats]): String = d.map { x =>
-      Json.obj("cores_n" -> x.coresN.toString, "cores_4n" -> x.cores4N.toString,
-        "quiet_pairs" -> x.quietPairs.toString, "pairs" -> x.pairs.toString,
-        "quiet_median_eff" -> f"${x.quietMedian}%.3f",
-        "min_eff" -> f"${x.minEff}%.3f", "best_eff" -> f"${x.best}%.3f",
-        "min_sec_n" -> f"${x.minSecN}%.3f", "min_sec_4n" -> f"${x.minSec4N}%.3f",
-        "mem_ceiling_eff" -> f"${x.memEffMedian}%.3f")
-    }.getOrElse("null")
-    val extraction =
-      f"""{"turns":$totalTurns,"cores_n":$lowCores,"cores_4n":$highCores,""" +
-      f""""sec_n":$secN%.3f,"sec_4n":$sec4N%.3f,""" +
-      f""""turns_per_sec_n":$thrN%.1f,"turns_per_sec_4n":$thr4N%.1f,""" +
-      f""""scaling_efficiency":${sum.headline}%.3f,""" +
-      s""""scaling_dim_2_8":${dimJson(d28)},""" +
-      // at CPUS=8 this key would duplicate scaling_dim_2_8 (last-wins)
-      (if (n4nDistinct)
-        s""""scaling_dim_${lowCores}_$highCores":${dimJson(d832)},"""
-      else "") +
-      s""""scaling_multiproc_1x2_4x2":${dimJson(dMp2)},""" +
-      s""""scaling_multiproc_2x4_8x4":${dimJson(dMp)},""" +
-      f""""quiet_probe_wall_sec":${ScalingHarness.QuietCpuProbeWall}}"""
-    // raw samples: their own stderr line + the full-record file — NEVER the
-    // final stdout line (they consumed round 3's whole 2 KB artifact tail)
-    System.err.println(s"[bench] raw scaling samples: $sampleArr")
-    val fullRecord =
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
-      s""""queries":$qs,"query_errors":$errs,""" +
-      s""""extraction":${extraction.dropRight(1)},"samples":$sampleArr}}"""
+    val extraction = scaling.toJson
     Files.createDirectories(Paths.get("bench"))
-    Files.writeString(Paths.get("bench/full_bench.json"), fullRecord + "\n")
+    Files.writeString(Paths.get("bench/full_bench.json"),
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
+      s""""queries":$qs,"query_errors":$errs,"extraction":$extraction}""" + "\n")
 
-    // best same-query-set sweep total across runs (bench/best_sweep.json):
-    // sweep totals on this shared host vary up to ~2× with weather (round-4
-    // verdict: a 139.6 s final sweep overstated the same code's 96.8 s
-    // quiet sweep by ~1.4×), so the per-run table alone misreads as code
-    // speed. The carry resets whenever the query SET changes — identity is
-    // a HASH of the sorted query names, not a count (review fix: an
-    // equal-count swap of one query for another must not inherit a stale
-    // best), and an ERRORING run can never seed or lower the best under
-    // ANY identity (errored queries fail fast, so their total is
-    // artificially LOW — the old n-changed fallback seeded exactly that).
-    val bestTotal: Double = {
-      val p = Paths.get("bench/best_sweep.json")
-      val setId = {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        results.map(_._1).sorted.foreach(n => md.update((n + "\n").getBytes("UTF-8")))
-        md.digest().map("%02x".format(_)).mkString.take(12)
-      }
-      val prior: Option[(String, Double)] =
-        if (Files.exists(p)) {
-          val txt = Files.readString(p)
-          val m = java.util.regex.Pattern
-            .compile(""""set":"([0-9a-f]+)".*"total_sec":([0-9.]+)""")
-            .matcher(txt)
-          if (m.find()) Some((m.group(1), m.group(2).toDouble))
-          else {
-            // legacy count-keyed record: accept as same-set iff the count
-            // matches (one-way migration to the set-hash key on write)
-            val lm = java.util.regex.Pattern
-              .compile(""""n":(\d+),"total_sec":([0-9.]+)""").matcher(txt)
-            if (lm.find() && lm.group(1).toInt == results.size)
-              Some((setId, lm.group(2).toDouble))
-            else None
-          }
-        } else None
-      val errFree = results.forall(_._3.isEmpty)
-      val best = prior match {
-        case Some((id, t)) if id == setId =>
-          if (errFree) math.min(t, total) else t
-        // different/unknown set: report this run's total; the write guard
-        // below lets only an error-free run SEED the new set's record
-        case _ => total
-      }
-      if (errFree || prior.exists(_._1 == setId))
-        Files.writeString(p,
-          s"""{"set":"$setId","n":${results.size},"total_sec":${f"$best%.1f"}}""" + "\n")
-      best
-    }
-
-    def v(x: Double, fmt: String = "%.3f"): String = if (x < 0) "—" else fmt.format(x)
-    def fmtDim(d: Option[ScalingHarness.DimStats], label: String): String = d.map { x =>
-      Seq(
-        s"| $label quiet pairs / attempts | ${x.quietPairs} / ${x.pairs} |",
-        s"| $label efficiency (quiet median) | ${v(x.quietMedian)} |",
-        s"| $label efficiency (session-min, conservative) | ${v(x.minEff)} |",
-        s"| $label session-min walls N / 4N | ${v(x.minSecN, "%.2f")} s / ${v(x.minSec4N, "%.2f")} s |",
-        s"| $label memory-bandwidth probe ratio (1.0 = ideal scaling) | ${v(x.memEffMedian)} |"
-      ).mkString("\n|")  // continuation-line margins eaten by the outer stripMargin
-    }.getOrElse(s"| $label | (no samples) |")
-
-    Files.writeString(Paths.get("BENCH.md"),
-      s"""# BENCH — measured on this machine (local mode, JIT-warmed)
-         |
-         |Input: deterministic synthetic transcript table, ${totalTurns} turns
-         |(seed 42, heavy-tail conversation sizes incl. monster conversations),
-         |256 evenly-sized parquet files at `${ScalingHarness.ScalingPath}`.
-         |Job: full extraction (`Extraction.extract`, ${ScalingHarness.JobPartitions}
-         |partitions) — explicit repartition on conv_id + within-partition sort
-         |+ per-conversation FSM, materialized to a noop sink. Each parallelism
-         |level runs in a dedicated taskset-confined child JVM (GC/JIT threads
-         |confined too), small-input warmup + min of 2 timed runs.
-         |
-         |## Scaling evidence (north rule: efficiency ≥ 0.8 from N to 4N)
-         |
-         |Three measured hardware facts shape the methodology (all probes in
-         |`graft.tools.ScalingHarness`, raw samples in
-         |`bench/scaling_samples.jsonl` and embedded in the bench JSON):
-         |
-         |1. **Host weather**: the shared host has multi-minute contention
-         |   phases — every timed run is bracketed by absolute-wall pure-CPU
-         |   probes (quiet floor ${ScalingHarness.QuietCpuProbeWall}s at any
-         |   thread count) plus /proc/stat steal deltas.
-         |2. **Idle-box turbo**: an N-thread run on an otherwise-idle box
-         |   clocks ~1.6× higher, deflating any single-box ratio to ~0.5 on
-         |   perfectly quiet hardware — so every sub-machine-width side runs
-         |   "node-loaded" (nice-19 zero-memory spinner on the unused cores),
-         |   the faithful emulation of an N-core slice of a fully-occupied
-         |   cluster node.
-         |3. **Box-width (DRAM) ceiling**: a streaming-memory probe (one
-         |   JVM, per-thread arrays) measures ~56-64 GB/s saturated at ~8
-         |   threads — 8→32 cores adds ~1.1× bandwidth, capping ANY
-         |   data-intensive job's 8→32 efficiency near ~0.3-0.5 regardless
-         |   of JVM shape. Honest (exit-barriered, see the round-4
-         |   correction below) measurement confirms it: 8 separate 4-core
-         |   JVMs land at roughly the same 32-core stage wall as one
-         |   32-thread JVM. An earlier claim that the executor shape
-         |   "reaches ~0.85 at 8→32" was a measurement artifact, not
-         |   physics.
-         |4. **Probe blind spot (round-5 box)**: the final-round box clocks
-         |   the cache-resident CPU probe ~2× FASTER than the 2.31 s floor
-         |   calibrated on the round-4 box (bare splitmix probe ~1.1-1.3 s),
-         |   so the absolute probe band alone cannot flag its disturbance
-         |   phases; and those phases are often DRAM-neighbor contention the
-         |   CPU probe cannot see at all (job walls 1.3-5× with probes at
-         |   parity and CPU ~90% idle mid-sweep — scheduling/bandwidth
-         |   stalls, not compute). The /proc/stat steal delta is the
-         |   discriminating signal there, hence the 1% steal gate (was 2%):
-         |   it excludes the one bandwidth-starved sample that slipped
-         |   through (gate-dim eff 0.391 at steal 1.45%) while every
-         |   genuinely quiet trail pair reads ≤0.7%.
-         |
-         |The EXECUTOR-SHAPED dimensions measure the deployment the north
-         |rule actually describes: separate child JVMs (disjoint taskset
-         |ranges, disjoint file-modulo shards of the same table, warmup
-         |barrier then simultaneous release; wall = max shard wall — the
-         |stage wall of the emulated cluster), carrying the per-process
-         |overheads a real N→4N executor scale-up pays (own heap/GC/codegen/
-         |shuffle dirs) and reaping its per-process reliefs (own small heap):
-         |
-         |- **1 → 4 processes × 2 cores** (2 → 8 total cores): the literal
-         |  "N executors → 4N executors" of the north rule, inside the
-         |  box's bandwidth-scalable regime. Post-barrier efficiency
-         |  ~0.80-0.99 (see table) — clears the 0.8 gate honestly.
-         |- 2 → 8 processes × 4 cores (8 → 32 total cores): the same
-         |  executor scale-up at 4× the width — lands at the DRAM ceiling
-         |  (~0.3-0.5), matching the thread-shaped control and the
-         |  bandwidth probe (fact 3). Reported as the hardware-capped
-         |  control, NOT as gate evidence.
-         |
-         |**Round-4 measurement-integrity correction**: the pre-round-4
-         |shard protocol let early-finishing shard JVMs EXIT while siblings
-         |were still in their timed runs — the "stage wall" (max shard
-         |wall) degenerated toward a lone-shard-on-an-idle-box wall (the
-         |8×4 side measured ~4.2 s vs the honest all-shards-resident
-         |14-19 s, a ~4× bias; the 2→8-core dim read "superlinear" ~1.16
-         |for the same reason). Shards now hold an exit barrier until every
-         |sibling has reported. The biased pre-barrier trail is archived in
-         |`bench/multiproc_samples_prebarrier.jsonl` (kept as evidence, not
-         |mixed into statistics); `bench/multiproc_samples.jsonl` carries
-         |only honest post-barrier samples.
-         |
-         || quantity | value |
-         || --- | --- |
-         |${fmtDim(d28, "**2→8 threads (single-JVM)**")}
-         |${fmtDim(d832, s"$lowCores→$highCores threads (monolith-JVM control)")}
-         |${fmtDim(dMp2, "**1→4 procs × 2 cores (executor-shaped — the north rule's literal shape)**")}
-         |${fmtDim(dMp, "**2→8 procs × 4 cores (executor-shaped, 4× width)**")}
-         || **headline scaling efficiency (2→8)** | ${v(sum.headline)} |
-         || representative throughput local[$highCores] | ${v(thr4N, "%.0f")} turns/s (${v(sec4N, "%.2f")} s) |
-         || representative throughput local[$lowCores] | ${v(thrN, "%.0f")} turns/s (${v(secN, "%.2f")} s) |
-         |
-         |The pure-CPU probe scales at ~1.0 in every quiet window (ruling
-         |out starvation artifacts). The gate evidence is the
-         |executor-shaped 1→4-procs dimension in the bandwidth-scalable
-         |regime (≥ 0.8 post-barrier); both 8→32 dimensions (thread- and
-         |process-shaped) sit at the measured DRAM ceiling — a property of
-         |this box's memory system, not of the plan, and exactly why real
-         |clusters scale data-intensive jobs across NODES (each bringing
-         |its own memory channels) rather than widening within one socket.
-         |
-         |## Per-query timings (local[$highCores], $sfDir)
-         |
-         |Noop-sink materialization per query; full map also in
-         |`bench/full_bench.json` (`queries`); failures under `query_errors`.
-         |${results.size} queries, ${results.count(_._3.nonEmpty)} errors,
-         |total ${f"$total%.1f"} s this run; best same-query-set sweep on
-         |this trail ${f"$bestTotal%.1f"} s (bench/best_sweep.json — sweep
-         |totals vary up to ~2× with host weather on this shared box, so
-         |the best-of trail is the code-speed number; a slower total here
-         |is weather unless per-query inflation is NON-uniform).
-         |
-         || query | sec |
-         || --- | --- |
-         |${results.sortBy(-_._2).map { case (k, v, e) =>
-             f"| $k | $v%.2f${e.map(_ => " ERR").getOrElse("")} |" }.mkString("\n")}
-         |
-         |## Stage decomposition + the bucketed plane
-         |
-         |bench/README.md carries the measured extraction stage split on this
-         |corpus (scan ~24% / shuffle+sort ~39% / FSM ~37%), the
-         |exchange-free bucketed plane beating the exchange plane 1.79×
-         |(3.24 s vs 5.80 s at local[32]) — the layout a standing 100-TB
-         |table would use, re-measurable via `graft.BenchOne … bucketed 256` —
-         |and a 52M-turn (3×) per-JVM data-volume ceiling measurement: the
-         |12 g monolith JVM FAILS outright at 3× volume, the 32 g one loses
-         |~30% throughput, while sharded executors hold per-JVM volume
-         |constant (full 52M pipeline incl. snapshot commit: 152 s, rc=0).
-         |
-         |## Run-budget notes (why round 2's artifacts were empty)
-         |
-         |Round 2's driver runs timed out (BENCH_r02 rc=124, CORRECTNESS_r02
-         |empty) for three measured, now-fixed reasons: (1) `-XX:+AlwaysPreTouch`
-         |— this kernel zeroes anonymous pages at ~100 MB/s, so pre-touching a
-         |24 GB heap cost ~4 min of wall before `main()` on EVERY `sbt runMain`;
-         |(2) the same page-zero tax resurfaced lazily when G1 lapped a 24 GB
-         |heap mid-sweep (~4 min spread over queries) — the run heap is now 12 GB;
-         |(3) the bench re-derived scaling evidence the committed sample trail
-         |already carried (5-8 quiet-weather minutes per fresh pair) — it now
-         |samples only when a dimension has < 3 quiet pairs. Full driver-style
-         |bench: ~2.5 min end-to-end; verify: ~4 min.
-         |""".stripMargin)
+    val memTotalKb = scala.util.Using(scala.io.Source.fromFile("/proc/meminfo"))(_.getLines()
+      .collectFirst { case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong }.get)
+      .getOrElse(-1L)
+    val benchMd = Seq(
+      "# BENCH — measured on this machine (local mode)",
+      "",
+      "Written by `graft.Bench`; every number below comes from one run.",
+      "",
+      "## Machine",
+      "",
+      "| quantity | value |",
+      "| --- | --- |",
+      s"| cores (`local[N]` width of the sweep) | $cores |",
+      f"| memory (MemTotal) | ${memTotalKb / 1048576.0}%.1f GiB |",
+      s"| JVM max heap | ${Runtime.getRuntime.maxMemory() >> 20} MiB |",
+      s"| JVM | ${System.getProperty("java.version")} |",
+      "",
+      s"## Extraction, N vs 4N cores (north rule: efficiency ≥ $ScalingTarget)",
+      "",
+      "Job: `ExtractJob.extract` (skew-aware extraction, partitions = cores,",
+      "monster threshold 1000) to the noop sink, over a fixed-seed (42)",
+      s"`TranscriptGen` table of $ExtractionConvs conversations and ${scaling.turns} turns",
+      "on disk. Both widths run in one JVM: one warm-up job, then the median",
+      s"of $TimedJobs timed jobs.",
+      "",
+      "| cores | median wall | turns/s |",
+      "| --- | --- | --- |",
+      f"| ${scaling.coresN} (N) | ${scaling.secN}%.2f s | ${scaling.turnsPerSecN}%.0f |",
+      f"| ${scaling.cores4N} (4N) | ${scaling.sec4N}%.2f s | ${scaling.turnsPerSec4N}%.0f |",
+      "",
+      f"Scaling efficiency ${scaling.efficiency}%.3f: target $ScalingTarget " +
+        s"**${if (scaling.targetMet) "met" else "missed"}**.",
+      "",
+      s"## Per-query timings (local[$cores], $sfDir)",
+      "",
+      "Noop-sink materialization per query, one sample each; full map also in",
+      "`bench/full_bench.json` (`queries`); failures under `query_errors`.",
+      f"${results.size} queries, ${results.count(_._3.nonEmpty)} errors, total $total%.1f s.",
+      "",
+      "| query | sec |",
+      "| --- | --- |") ++
+      results.sortBy(-_._2).map { case (k, v, e) =>
+        f"| $k | $v%.2f${e.map(_ => " ERR").getOrElse("")} |" }
+    Files.writeString(Paths.get("BENCH.md"), benchMd.mkString("", "\n", "\n"))
 
     // the one stdout line: compact on purpose (see scaladoc) — complete
     // per-query map lives in bench/full_bench.json and the BENCH.md table
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"slowest_queries":$slowest,"query_errors":$errsCompact,"extraction":$extraction,"full":"bench/full_bench.json"}""")
+  }
+
+  /** Conversations in the fixed-seed (42) extraction table. */
+  val ExtractionConvs = 20000
+  val TimedJobs = 3
+  /** North rule: throughput scaling efficiency from N to 4N executors. */
+  val ScalingTarget = 0.8
+
+  /** Median job walls of the extraction job at N and 4N cores. */
+  case class Scaling(turns: Long, coresN: Int, cores4N: Int, secN: Double, sec4N: Double) {
+    def turnsPerSecN: Double = turns / secN
+    def turnsPerSec4N: Double = turns / sec4N
+    def efficiency: Double = turnsPerSec4N / turnsPerSecN / (cores4N.toDouble / coresN)
+    def targetMet: Boolean = efficiency >= ScalingTarget
+    def toJson: String =
+      f"""{"turns":$turns,"cores_n":$coresN,"cores_4n":$cores4N,""" +
+      f""""sec_n":$secN%.3f,"sec_4n":$sec4N%.3f,""" +
+      f""""turns_per_sec_n":$turnsPerSecN%.1f,"turns_per_sec_4n":$turnsPerSec4N%.1f,""" +
+      f""""scaling_efficiency":$efficiency%.3f,"scaling_target":$ScalingTarget,""" +
+      s""""scaling_target_met":$targetMet}"""
+  }
+
+  /** The `ExtractJob` extraction at 4N = `cores` and N = max(1, cores / 4)
+    * in this JVM, over one fixed-seed transcript table materialized under a
+    * temp dir (deleted on return): one warm-up and `TimedJobs` timed jobs to
+    * the noop sink at each width, median wall. */
+  private def measureScaling(cores: Int): Scaling = {
+    val coresN = math.max(1, cores / 4)
+    val dir = Files.createTempDirectory("graft-bench-extract")
+    val raw = dir.resolve("raw").toString
+    try {
+      var turns = 0L
+      def medianWall(c: Int): Double = {
+        val spark = newSession(c)
+        try {
+          if (turns == 0L) {
+            TranscriptGen.materialize(spark, FixtureGen.Profile(numConvs = ExtractionConvs),
+              raw, parallelism = cores)
+            turns = spark.read.parquet(raw).count()
+          }
+          import spark.implicits._
+          def job(): Double = time {
+            ExtractJob.extract(spark.read.parquet(raw).as[Turn], c)
+              .write.format("noop").mode("overwrite").save()
+          }
+          job()
+          val walls = Seq.fill(TimedJobs)(job()).sorted
+          phase(f"extraction local[$c]: ${walls.map(w => f"$w%.2f").mkString(" ")} s")
+          walls(walls.size / 2)
+        } finally spark.stop()
+      }
+      val sec4N = medianWall(cores)
+      val secN = medianWall(coresN)
+      Scaling(turns, coresN, cores, secN, sec4N)
+    } finally Snapshot.deleteRecursively(dir)
   }
 }

@@ -17,8 +17,7 @@ object Verify {
     }
     // default to machine width: the driver invokes this without env
     // overrides, and local[4] over 100+ queries is a silent budget-killer
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = ExtractJob.defaultCores.toString
     System.err.println(s"[verify] main entered, local[$cpus] on $sfDir")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

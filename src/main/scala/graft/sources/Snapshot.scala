@@ -158,8 +158,10 @@ object Snapshot {
     tagVersion(table, tag).map(manifestMetrics(table, _))
   }
 
-  /** Highest committed version whose manifest carries `tag`, if any. */
+  /** Highest committed version whose manifest carries `tag`, if any. A
+    * table dir that does not exist yet (a first tagged commit) has none. */
   private def tagVersion(table: Path, tag: String): Option[Int] = {
+    if (!Files.exists(table)) return None
     val re = "\"tag\"\\s*:\\s*\"([^\"]*)\"".r
     // FULL-name match: a leftover manifest-v<k>.json.tmp from a killed
     // atomicWrite must never resolve a tag to an uncommitted version
@@ -1604,7 +1606,7 @@ object Snapshot {
     expire
   }
 
-  private def deleteRecursively(p: Path): Unit =
+  private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p))
       // deleteIfExists: wedged-table repair runs from EVERY reader's
       // recoverCommitted, so two parties may race to clean the same staging

@@ -190,6 +190,24 @@ class ExtractionSpec extends AnyFunSuite {
     assert(graft.sources.Snapshot.metricsOfTag(table, "nosuch").isEmpty)
   }
 
+  test("incrementalCommit: a tagged first commit onto a missing path == full recompute") {
+    import graft.sources.Snapshot
+    val p = FixtureGen.Profile(numConvs = 30, monsterEvery = 13,
+      monsterTurns = 60, invalidEvery = 7)
+    val all = TranscriptGen.generate(spark, p, parallelism = 4)
+    val table = java.nio.file.Files.createTempDirectory("inc-first").resolve("table").toString
+    val cfg = Extraction.Config(numPartitions = 4)
+    val committed = Extraction.incrementalCommit(all, table, cfg, numChunks = 4, batchTag = "day-1")
+    val full = Extraction.observed(Extraction.extractSkewAware(all, cfg))._1
+      .collect().map(_.toString).sorted.toSeq
+    assert(Snapshot.read(spark, table).collect().map(_.toString).sorted.toSeq == full)
+    assert(committed("turns") == full.size.toLong)
+    assert(Snapshot.committedVersion(table).contains(0))
+    val replay = Extraction.incrementalCommit(all, table, cfg, numChunks = 4, batchTag = "day-1")
+    assert(replay == committed, "a replayed first-day tag returns the committed metrics")
+    assert(Snapshot.committedVersion(table).contains(0), "a replayed tag adds no version")
+  }
+
   test("stripHtml stage: pipeline on raw == oracle on stripped turns") {
     val turns = TranscriptGen.generate(spark, profile, parallelism = 4)
     val got = sortedResults(Extraction.extract(turns,
